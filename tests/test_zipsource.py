@@ -8,6 +8,7 @@ from __future__ import annotations
 import hashlib
 import io
 import random
+import sys
 import zipfile
 
 import pytest
@@ -696,7 +697,10 @@ def test_extract_member_hashes_scoped(spark, tmp_path):
     from zip_to_parquet_spark.sources.zipsource import extract_member_hashes
 
     members = [(f"m{i}.txt", f"data-{i}".encode()) for i in range(4)]
-    p = make_zip(tmp_path / "ex.zip", members)
+    # A duplicated name resolves to its last entry, as zipfile's lookup does.
+    members.append(("m3.txt", b"data-3-again"))
+    with pytest.warns(UserWarning, match="Duplicate name"):
+        p = make_zip(tmp_path / "ex.zip", members)
     want = spark.createDataFrame(
         [(p, "m1.txt"), (p, "m3.txt")], "source string, name string"
     )
@@ -705,7 +709,7 @@ def test_extract_member_hashes_scoped(spark, tmp_path):
     }
     assert got == {
         "m1.txt": hashlib.sha256(b"data-1").hexdigest(),
-        "m3.txt": hashlib.sha256(b"data-3").hexdigest(),
+        "m3.txt": hashlib.sha256(b"data-3-again").hexdigest(),
     }
 
 
@@ -878,6 +882,19 @@ def test_jsonl_stream_abort_tolerates_none_messages(tmp_path):
     assert left == ["keep.jsonl"]  # all temps swept, real data untouched
 
 
+ZIP64_MEMBERS = 65540  # > 0xFFFF - 1 forces the ZIP64 EOCD
+
+
+def make_zip64(path, comment=b""):
+    """An archive of ZIP64_MEMBERS empty members, which stdlib zipfile
+    writes with ZIP64 end records."""
+    with zipfile.ZipFile(path, "w") as z:
+        for i in range(ZIP64_MEMBERS):
+            z.writestr(f"m{i:06d}.txt", b"")
+        z.comment = comment
+    return str(path)
+
+
 def test_zip64_eocd_member_count(tmp_path):
     """A 65,540-member archive overflows the classic EOCD's 2-byte total
     (0xFFFF sentinel) and stdlib zipfile writes a ZIP64 EOCD — the fast
@@ -886,24 +903,15 @@ def test_zip64_eocd_member_count(tmp_path):
     reference parity for builder.rs's per-archive iteration at sizes the
     reference never handled). Also covers the sentinel's interaction
     with a trailing archive comment (the EOCD scan must skip past it)."""
-    import zipfile as zf
-
     from zip_to_parquet_spark.sources.zipsource import _eocd_member_count
 
-    n = 65540  # > 0xFFFF - 1 forces the ZIP64 EOCD
-    zp = str(tmp_path / "z64.zip")
-    with zf.ZipFile(zp, "w") as z:
-        for i in range(n):
-            z.writestr(f"m{i:06d}.txt", b"")
+    n = ZIP64_MEMBERS
+    zp = make_zip64(tmp_path / "z64.zip")
     assert _eocd_member_count(zp) == n
 
     # Same archive with a zip comment: the signature scan must look back
     # past the comment bytes before finding the EOCD pair.
-    zc = str(tmp_path / "z64c.zip")
-    with zf.ZipFile(zc, "w") as z:
-        for i in range(n):
-            z.writestr(f"m{i:06d}.txt", b"")
-        z.comment = b"trailing comment " * 100
+    zc = make_zip64(tmp_path / "z64c.zip", comment=b"trailing comment " * 100)
     assert _eocd_member_count(zc) == n
 
     # Jumbo-split planning must work off the ZIP64 total: index-range
@@ -920,3 +928,254 @@ def test_zip64_eocd_member_count(tmp_path):
     assert spans[0][0] == 0 and spans[-1][1] == n
     assert all(a[1] == b[0] for a, b in zip(spans, spans[1:]))
     assert len(parts) == -(-n // 10000)  # ceil: 7 partitions
+
+
+# ---------------------------------------------------------------------------
+# The central-directory reader against stdlib zipfile
+# ---------------------------------------------------------------------------
+class _Unseekable(io.RawIOBase):
+    """A write-only stream without tell(): zipfile then streams every member
+    with a data descriptor (flag bit 3, sizes and CRC after the data)."""
+
+    def __init__(self):
+        self.buf = io.BytesIO()
+
+    def writable(self):
+        return True
+
+    def write(self, b):
+        return self.buf.write(b)
+
+
+def _features_zip(fh):
+    """Every method zipfile writes, duplicates, directory and empty members,
+    UTF-8 and (patched in later) cp437 names, a member large enough to take
+    several bounded reads, and an archive comment."""
+    big = random.Random(5).randbytes(5 * 1024 * 1024 // 2)  # incompressible
+    text = b"lorem ipsum dolor sit amet " * 400
+    members = [
+        ("stored.txt", zipfile.ZIP_STORED, b"stored payload"),
+        ("deflate.txt", zipfile.ZIP_DEFLATED, text),
+        ("bzip2.txt", zipfile.ZIP_BZIP2, text),
+        ("lzma.txt", zipfile.ZIP_LZMA, text),
+        ("dir/", zipfile.ZIP_STORED, b""),
+        ("dir/empty-deflate.txt", zipfile.ZIP_DEFLATED, b""),
+        ("dir/empty-stored.txt", zipfile.ZIP_STORED, b""),
+        ("dup.txt", zipfile.ZIP_DEFLATED, b"first copy"),
+        ("données/π.txt", zipfile.ZIP_DEFLATED, b"utf-8 flagged name"),
+        ("cafX.txt", zipfile.ZIP_STORED, b"cp437 name"),
+        ("big.bin", zipfile.ZIP_DEFLATED, big),
+        ("dup.txt", zipfile.ZIP_STORED, b"second copy"),
+    ]
+    with pytest.warns(UserWarning, match="Duplicate name"):
+        with zipfile.ZipFile(fh, "w") as zf:
+            for name, method, data in members:
+                zi = zipfile.ZipInfo(name, date_time=FIXED_DATE)
+                zi.compress_type = method
+                zf.writestr(zi, data)
+            zf.comment = b"archive comment"
+
+
+def _parity_archives(tmp_path):
+    """(path, split_members, zstd payloads) for each archive under test."""
+    buf = io.BytesIO()
+    _features_zip(buf)
+    # 0x82 is 'é' in cp437; the name carries no UTF-8 flag.
+    features = buf.getvalue().replace(b"cafX.txt", b"caf\x82.txt")
+    (tmp_path / "features.zip").write_bytes(features)
+    # A self-extractor: stub bytes before the first local header, so every
+    # offset the central directory stores is off by the stub's length.
+    (tmp_path / "sfx.exe").write_bytes(b"MZ\x90\x00stub" * 100 + features)
+    stream = _Unseekable()
+    with zipfile.ZipFile(stream, "w", zipfile.ZIP_DEFLATED) as zf:
+        for i in range(7):
+            zf.writestr(f"s{i}.txt", f"streamed {i} ".encode() * (i * 50))
+    (tmp_path / "streamed.zip").write_bytes(stream.buf.getvalue())
+    zstd = [("z/a.txt", b"zstd payload " * 1000), ("z/b.bin", bytes(range(256)) * 7),
+            ("z/empty", b""), ("z/c.txt", b"c")]
+    return [
+        (str(tmp_path / "features.zip"), 4, {}),
+        (str(tmp_path / "sfx.exe"), 5, {}),
+        (str(tmp_path / "streamed.zip"), 3, {}),
+        (make_zstd_zip(tmp_path / "zstd.zip", zstd), 3, dict(zstd)),
+        (make_zip64(tmp_path / "z64.zip"), 10000, {}),
+    ]
+
+
+def test_reader_parity_with_zipfile(tmp_path):
+    """For every split range of every archive, the reader's (name, body,
+    hash) rows equal those built with stdlib zipfile over the same slice of
+    its infolist: methods 0/8/12/14/93, data descriptors, ZIP64, a prepended
+    stub, an archive comment, cp437 and UTF-8 names, duplicate names (each
+    entry its own row), directory entries and empty members."""
+    import json
+
+    from zip_to_parquet_spark.sources.zipsource import ZipMembersReader
+
+    for path, split, zstd in _parity_archives(tmp_path):
+        rdr = ZipMembersReader({"paths": json.dumps([path]), "split_members": str(split)})
+        parts = rdr.partitions()
+        assert len(parts) > 1, path
+        with zipfile.ZipFile(path) as zf:
+            infos = zf.infolist()
+            assert parts[-1].end == len(infos), path
+            for part in parts:
+                want = []
+                for info in infos[part.start : part.end]:
+                    if info.is_dir():
+                        data = b""
+                    elif info.compress_type == 93:  # zipfile cannot decode zstd
+                        data = zstd[info.filename]
+                    else:
+                        data = zf.read(info)
+                    want.append((info.filename, data, hashlib.sha256(data).hexdigest()))
+                got = []
+                for batch in rdr.read(part):
+                    cols = batch.to_pydict()
+                    got.extend(zip(cols["name"], cols["body"], cols["hash"]))
+                assert got == want, (path, part)
+    names = [i.filename for i in zipfile.ZipFile(tmp_path / "features.zip").infolist()]
+    assert "café.txt" in names and "données/π.txt" in names
+    assert names.count("dup.txt") == 2
+    with zipfile.ZipFile(tmp_path / "streamed.zip") as zf:
+        assert all(i.flag_bits & 0x08 for i in zf.infolist())
+
+
+def test_reader_resolves_zip64_extra_field(tmp_path):
+    """A directory entry whose sizes and local-header offset hold the
+    0xFFFFFFFF sentinel takes the real values from its ZIP64 extra field
+    (what an archive over 4 GiB carries), as zipfile resolves them."""
+    import json
+    import struct
+    import zlib
+
+    from zip_to_parquet_spark.sources.zipsource import ZipMembersReader
+
+    lead, data = b"lead member", b"member behind ZIP64 sentinels"
+    out = io.BytesIO()
+    entries = []
+    for name, body in ((b"lead.txt", lead), (b"z64.txt", data)):
+        crc = zlib.crc32(body)
+        entries.append((name, crc, len(body), out.tell()))
+        out.write(b"PK\x03\x04" + struct.pack("<HHHHHIIIHH", 20, 0, 0, 0, 0, crc,
+                                               len(body), len(body), len(name), 0))
+        out.write(name + body)
+    cd_start = out.tell()
+    for name, crc, size, offset in entries:
+        extra = b""
+        if name == b"z64.txt":
+            extra = struct.pack("<HHQQQ", 1, 24, size, size, offset)
+            size = offset = 0xFFFFFFFF
+        out.write(b"PK\x01\x02" + struct.pack("<HHHHHHIIIHHHHHII", 45, 45, 0, 0, 0, 0, crc,
+                                               size, size, len(name), len(extra), 0, 0, 0, 0,
+                                               offset))
+        out.write(name + extra)
+    out.write(b"PK\x05\x06" + struct.pack("<HHHHIIH", 0, 0, 2, 2, out.tell() - cd_start,
+                                           cd_start, 0))
+    zp = tmp_path / "z64extra.zip"
+    zp.write_bytes(out.getvalue())
+
+    with zipfile.ZipFile(zp) as zf:
+        assert [zf.read(i) for i in zf.infolist()] == [lead, data]
+    rdr = ZipMembersReader({"paths": json.dumps([str(zp)])})
+    (batch,) = list(rdr.read(rdr.partitions()[0]))
+    assert batch.column("body").to_pylist() == [lead, data]
+
+
+def _member_data_span(raw: bytes, name: str) -> tuple[int, int]:
+    """(local header offset, compressed-data offset) of ``name``."""
+    with zipfile.ZipFile(io.BytesIO(raw)) as zf:
+        lh = zf.getinfo(name).header_offset
+    n, m = int.from_bytes(raw[lh + 26 : lh + 28], "little"), int.from_bytes(raw[lh + 28 : lh + 30], "little")
+    return lh, lh + 30 + n + m
+
+
+def _set_flag_bits(raw: bytearray, name: str, bits: int) -> None:
+    """OR ``bits`` into ``name``'s general-purpose flags, in its local
+    header and in its central-directory entry."""
+    lh, _ = _member_data_span(bytes(raw), name)
+    cd = raw.rfind(name.encode()) - 46  # the directory holds the last copy
+    assert raw[cd : cd + 4] == b"PK\x01\x02"
+    for at in (lh + 6, cd + 8):
+        raw[at : at + 2] = (int.from_bytes(raw[at : at + 2], "little") | bits).to_bytes(2, "little")
+
+
+def _corrupt_deflate(raw: bytearray, name: str) -> None:
+    _, data = _member_data_span(bytes(raw), name)
+    raw[data : data + 4] = b"\xff" * 4  # BTYPE=11: an invalid deflate block
+
+
+@pytest.mark.parametrize(
+    "corrupt",
+    [
+        _corrupt_deflate,
+        lambda raw, name: _set_flag_bits(raw, name, 0x01),  # encrypted
+        lambda raw, name: _set_flag_bits(raw, name, 0x20),  # compressed patched data
+        lambda raw, name: _set_flag_bits(raw, name, 0x40),  # strong encryption
+    ],
+    ids=["corrupt-deflate", "encrypted", "patched", "strong-encryption"],
+)
+def test_on_error_skip_undecodable_member(spark, tmp_path, corrupt):
+    """A member that cannot be decoded drops its archive under
+    on_error='skip' (counted once, zero rows, even though a readable member
+    precedes it) and fails the job by name under on_error='fail'."""
+    good = make_zip(tmp_path / "good.zip", BASIC)
+    bad = tmp_path / "bad.zip"
+    make_zip(bad, [("first.txt", b"readable"), ("victim.txt", b"payload " * 64)])
+    raw = bytearray(bad.read_bytes())
+    corrupt(raw, "victim.txt")
+    bad.write_bytes(bytes(raw))
+
+    acc = spark.sparkContext.accumulator(0)
+    rows = read_zip_members(
+        spark, [good, str(bad)], on_error="skip", skip_counter=acc
+    ).collect()
+    assert sorted(r["name"] for r in rows) == sorted(n for n, _ in BASIC)
+    assert acc.value == 1
+    with pytest.raises(Exception) as ei:
+        read_zip_members(spark, str(bad)).collect()
+    assert "victim.txt" in str(ei.value)
+
+
+@pytest.mark.skipif(
+    sys.version_info >= (3, 13),
+    reason="CPython 3.13's zipimporter.invalidate_caches already re-reads lazily",
+)
+def test_zip_import_directory_reread_is_stat_gated(tmp_path, monkeypatch):
+    """Importing the package gates zipimport: importlib.invalidate_caches()
+    (which PySpark's worker calls before every task) re-reads a zip on
+    sys.path only once the file changed since its importer last read it."""
+    import importlib
+    import os
+    import zipimport
+
+    import zip_to_parquet_spark  # noqa: F401 - installs the gate
+
+    def build(path, modules):
+        with zipfile.ZipFile(path, "w") as z:
+            for m in modules:
+                z.writestr(f"{m}.py", f"VALUE = {m!r}\n")
+
+    zp = str(tmp_path / "mods.zip")
+    build(zp, ["gated_mod_a"])
+    monkeypatch.syspath_prepend(zp)
+    try:
+        assert importlib.import_module("gated_mod_a").VALUE == "gated_mod_a"
+        importlib.invalidate_caches()  # the importer's first read under the gate
+
+        real = zipimport._read_directory
+        reads = []
+        monkeypatch.setattr(
+            zipimport, "_read_directory", lambda p: reads.append(p) or real(p)
+        )
+        importlib.invalidate_caches()
+        assert reads == []
+
+        build(zp + ".new", ["gated_mod_a", "gated_mod_b"])
+        os.replace(zp + ".new", zp)
+        importlib.invalidate_caches()
+        assert reads == [zp]
+        assert importlib.import_module("gated_mod_b").VALUE == "gated_mod_b"
+    finally:
+        for m in ("gated_mod_a", "gated_mod_b"):
+            sys.modules.pop(m, None)

@@ -26,17 +26,21 @@ paths must be on shared storage visible to executors (the same contract as
 any file-based source); ship this package via ``--py-files`` so workers can
 unpickle the reader.
 
-Scale notes: members are decompressed one at a time and flushed in bounded
-Arrow batches, so peak memory per task ≈ one decompressed member + one batch
+Scale notes: members are decompressed one at a time, each codec fed
+bounded reads of the compressed stream, and flushed in bounded Arrow
+batches, so peak memory per task ≈ one decompressed member + one batch
 (mirrors the reference's bounded-channel posture, builder.rs:53,188-190).
 Many-archive inputs parallelize one task per archive; a JUMBO archive (more
 than ``split_members`` central-directory entries) additionally splits into
-member-index-range partitions — the central directory is random-access, so
-each task opens the file independently and reads only its slice, bounding
-per-task time by the range size instead of the largest archive. The member
-count comes from the end-of-central-directory record alone (an O(comment)
-tail read, no CD parse), gated on file size so small archives cost the
-driver nothing beyond the stat it already does.
+member-index-range partitions, bounding per-task decode time by the range
+size instead of the largest archive. Each task opens the file itself and
+makes one bounded tail read for the end records, one read of the whole
+central directory (tens of bytes per member), then walks past the entries
+before its range using only their three length fields and decodes only
+the entries in its range; each member it keeps costs one seek to its local
+header. The member count for splitting comes from the end records alone (an
+O(comment) tail read, no directory parse), gated on file size so small
+archives cost the driver nothing beyond the stat it already does.
 
 Divergences by design (SURVEY §2 H): empty input glob raises at plan time
 (the reference silently writes an empty file — its NoInputsFound error is
@@ -46,12 +50,15 @@ reference panics mid-job).
 
 from __future__ import annotations
 
+import bz2
 import glob as _pyglob
 import hashlib
-import io
 import json
+import lzma
 import re
+import struct
 import zipfile
+import zlib
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -72,22 +79,10 @@ from zip_to_parquet_spark.functions.globs import glob_to_regex
 
 __all__ = ["read_zip_members", "count_members", "ZipMembersDataSource", "ZipFormatError"]
 
-# zipfile's native codecs, plus zstd (method 93 — modern zips; the
-# reference's zip crate decodes it by default, /root/reference/Cargo.toml:13).
-# Python's zipfile can't decode 93, so those members go through a manual
-# raw-stream + pyarrow-zstd path (_read_zstd_member). Anything else raises
-# a typed error.
-_ZSTD_METHOD = 93
-_SUPPORTED_METHODS = {
-    zipfile.ZIP_STORED,
-    zipfile.ZIP_DEFLATED,
-    zipfile.ZIP_BZIP2,
-    zipfile.ZIP_LZMA,
-}
-
 
 class ZipFormatError(ValueError):
-    """A member uses a compression method this engine cannot decode."""
+    """A member uses a compression method or feature (encryption, patch
+    data) this engine cannot decode."""
 
 
 def _strict_hash_hex(digest: bytes) -> str:
@@ -101,46 +96,58 @@ def _strict_hash_hex(digest: bytes) -> str:
     return '"' + "".join(format(b, "x") for b in digest) + '"'
 
 
-def _read_zstd_member(fh, info: zipfile.ZipInfo, path: str) -> bytes:
-    """Decode a zstd (method 93) member zipfile can't: seek to the member's
-    local header, read ``compress_size`` raw bytes, decompress with
-    pyarrow's zstd codec, and CRC-check like zipfile would. CRC/format
-    failures raise BadZipFile so ``on_error='skip'`` treats them exactly
-    like any other corrupt-archive error."""
-    import struct
-    import zlib
+# ---------------------------------------------------------------------------
+# Zip structure (PKWARE APPNOTE 6.3): one parser for the end records and the
+# central directory, one member reader. Every failure raises BadZipFile or
+# ZipFormatError, the two errors on_error='skip' drops an archive for.
+# ---------------------------------------------------------------------------
+_EOCD = struct.Struct("<4s4H2LH")  # end of central directory, 22 bytes
+_EOCD64_LOCATOR_SIZE = 20
+_EOCD64 = struct.Struct("<4sQ2H2L4Q")  # ZIP64 end of central directory
+_CD_ENTRY = struct.Struct("<4s4B4HL2L5H2L")  # central-directory entry, 46 bytes
+_CD_NAME_LENS = struct.Struct("<3H")  # name, extra, comment lengths at +28
+_LOCAL_SIZE = 30  # local file header
+_LOCAL_NAME_LENS = struct.Struct("<2H")  # name, extra lengths at +26
+_EXTRA_HEADER = struct.Struct("<2H")
+_U64 = struct.Struct("<Q")
+_UTF8_NAMES = 0x800
+# General-purpose flag bits zipfile refuses to extract, and why.
+_REFUSED_FLAGS = {0x1: "encrypted", 0x20: "compressed patched data", 0x40: "strongly encrypted"}
+_REFUSED_MASK = sum(_REFUSED_FLAGS)
+_MAX_EXTRACT_VERSION = 63  # zipfile's MAX_EXTRACT_VERSION
+_READ_CHUNK = 1 << 20  # compressed bytes fed to a decoder per read
 
-    import pyarrow as pa
 
-    if not pa.Codec.is_available("zstd"):  # pragma: no cover - env guard
-        raise ZipFormatError(
-            f"member {info.filename!r} in {path} is zstd-compressed but "
-            "pyarrow lacks zstd support in this environment"
-        )
-    fh.seek(info.header_offset)
-    header = fh.read(30)
-    if len(header) != 30 or header[:4] != b"PK\x03\x04":
-        raise zipfile.BadZipFile(
-            f"bad local file header for member {info.filename!r} in {path}"
-        )
-    fnlen, extralen = struct.unpack("<HH", header[26:30])
-    fh.seek(info.header_offset + 30 + fnlen + extralen)
-    raw = fh.read(info.compress_size)
-    if len(raw) != info.compress_size:
-        raise zipfile.BadZipFile(
-            f"truncated zstd member {info.filename!r} in {path}"
-        )
-    try:
-        data = pa.input_stream(pa.py_buffer(raw), compression="zstd").read()
-    except (pa.lib.ArrowInvalid, OSError) as exc:
-        raise zipfile.BadZipFile(
-            f"zstd decode failed for member {info.filename!r} in {path}: {exc}"
-        ) from exc
-    if zlib.crc32(data) & 0xFFFFFFFF != info.CRC:
-        raise zipfile.BadZipFile(
-            f"CRC mismatch for zstd member {info.filename!r} in {path}"
-        )
-    return data
+def _read_eocd(fh, path: str) -> tuple[int, int, int, int]:
+    """``(member count, central-directory offset, its size, shift)`` from
+    one bounded tail read: the end record, found as zipfile finds it (no
+    comment first, else scanning back past a comment of up to 64 KiB), and
+    the ZIP64 records just before it when their locator is there. ``shift``
+    is the number of bytes prepended to the archive (a self-extractor
+    stub), which every offset the directory stores is off by."""
+    size = fh.seek(0, 2)
+    tail_len = min(size, _EOCD.size + 0xFFFF + _EOCD64_LOCATOR_SIZE + _EOCD64.size)
+    fh.seek(size - tail_len)
+    tail = fh.read(tail_len)
+    i = len(tail) - _EOCD.size
+    if i < 0 or tail[i : i + 4] != b"PK\x05\x06" or tail[-2:] != b"\0\0":
+        i = tail.rfind(b"PK\x05\x06")
+    if i < 0 or i + _EOCD.size > len(tail):
+        raise zipfile.BadZipFile(f"no end-of-central-directory record in {path}")
+    count, cd_size, cd_offset = _EOCD.unpack_from(tail, i)[4:7]
+    end = size - tail_len + i  # where the central directory ends
+    j = i - _EOCD64_LOCATOR_SIZE - _EOCD64.size
+    if (
+        j >= 0
+        and tail[i - _EOCD64_LOCATOR_SIZE : i - _EOCD64_LOCATOR_SIZE + 4] == b"PK\x06\x07"
+        and tail[j : j + 4] == b"PK\x06\x06"
+    ):
+        count, cd_size, cd_offset = _EOCD64.unpack_from(tail, j)[7:10]
+        end -= _EOCD64_LOCATOR_SIZE + _EOCD64.size
+    shift = end - cd_size - cd_offset
+    if cd_offset + shift < 0:
+        raise zipfile.BadZipFile(f"bad central-directory offset in {path}")
+    return count, cd_offset + shift, cd_size, shift
 
 
 # Minimum possible central-directory entry: 46-byte fixed header + a
@@ -150,29 +157,166 @@ _MIN_CD_ENTRY = 46
 
 
 def _eocd_member_count(path: str) -> int:
-    """Total member count from the end-of-central-directory record alone —
-    seek to the tail, find the EOCD signature (scanning back past a zip
-    comment of up to 64 KiB), read the 2-byte total; 0xFFFF defers to the
-    ZIP64 EOCD's 8-byte total. Never parses the central directory, so a
-    million-member archive costs one bounded tail read."""
-    import os
-    import struct
-
-    size = os.path.getsize(path)
+    """Total member count from the end records alone — never parses the
+    central directory, so a million-member archive costs one bounded tail
+    read."""
     with open(path, "rb") as fh:
-        tail_len = min(size, 22 + 65535)
-        fh.seek(size - tail_len)
-        tail = fh.read(tail_len)
-    i = tail.rfind(b"PK\x05\x06")
-    if i < 0 or i + 22 > len(tail):
-        raise zipfile.BadZipFile(f"no end-of-central-directory record in {path}")
-    total = struct.unpack("<H", tail[i + 10 : i + 12])[0]
-    if total == 0xFFFF:
-        j = tail.rfind(b"PK\x06\x06", 0, i)
-        if j < 0 or j + 40 > len(tail):
-            raise zipfile.BadZipFile(f"ZIP64 EOCD not found in {path}")
-        total = struct.unpack("<Q", tail[j + 32 : j + 40])[0]
-    return total
+        return _read_eocd(fh, path)[0]
+
+
+def _zip64_sizes(extra: bytes, sizes: list[int], name: str, path: str) -> list[int]:
+    """Replace the 0xFFFFFFFF sentinels among ``[size, compress_size,
+    header_offset]`` with the 8-byte values of the ZIP64 extra field, which
+    stores only the sentinelled ones, in that order."""
+    pos = 0
+    while pos + 4 <= len(extra):
+        tag, length = _EXTRA_HEADER.unpack_from(extra, pos)
+        pos += 4
+        if pos + length > len(extra):
+            raise zipfile.BadZipFile(f"corrupt extra field for member {name!r} in {path}")
+        if tag == 1:
+            field = pos
+            for k, v in enumerate(sizes):
+                if v == 0xFFFFFFFF:
+                    if field + 8 > pos + length:
+                        raise zipfile.BadZipFile(
+                            f"corrupt ZIP64 extra field for member {name!r} in {path}"
+                        )
+                    sizes[k] = _U64.unpack_from(extra, field)[0]
+                    field += 8
+        pos += length
+    return sizes
+
+
+def _central_directory(fh, path: str, start: int = 0, end: int | None = None):
+    """Yield ``(name, entry)`` for the central-directory entries with index
+    in ``[start, end)``, in directory order, ``entry`` being what
+    :func:`_read_member` takes. One tail read and one read of the directory
+    bytes; entries before ``start`` cost only their three length fields.
+    Duplicate names each yield their own entry. Names decode as zipfile
+    decodes them: UTF-8 when flagged, else cp437, cut at a NUL."""
+    _count, cd_start, cd_size, shift = _read_eocd(fh, path)
+    fh.seek(cd_start)
+    cd = fh.read(cd_size)
+    if len(cd) != cd_size:
+        raise zipfile.BadZipFile(f"truncated central directory in {path}")
+    pos = i = 0
+    while i < start and pos < cd_size:
+        if pos + _CD_ENTRY.size > cd_size:
+            raise zipfile.BadZipFile(f"truncated central directory in {path}")
+        n, m, k = _CD_NAME_LENS.unpack_from(cd, pos + 28)
+        pos += _CD_ENTRY.size + n + m + k
+        i += 1
+    while pos < cd_size and (end is None or i < end):
+        if pos + _CD_ENTRY.size > cd_size:
+            raise zipfile.BadZipFile(f"truncated central directory in {path}")
+        (sig, _cv, _cs, version, _r, flags, method, _t, _d,
+         crc, csize, usize, n, m, k, _disk, _ia, _ea, offset) = _CD_ENTRY.unpack_from(cd, pos)
+        if sig != b"PK\x01\x02":
+            raise zipfile.BadZipFile(f"bad central-directory entry {i} in {path}")
+        pos += _CD_ENTRY.size
+        raw = cd[pos : pos + n]
+        try:
+            # ASCII decodes alike in both codecs; the cp437 codec is slow.
+            name = raw.decode("utf-8" if flags & _UTF8_NAMES or raw.isascii() else "cp437")
+        except UnicodeDecodeError as exc:
+            raise zipfile.BadZipFile(f"bad UTF-8 name of entry {i} in {path}: {exc}") from exc
+        if "\0" in name:
+            name = name[: name.index("\0")]
+        if version > _MAX_EXTRACT_VERSION:
+            raise ZipFormatError(
+                f"member {name!r} in {path} needs zip version {version / 10:.1f}"
+            )
+        if 0xFFFFFFFF in (usize, csize, offset):
+            usize, csize, offset = _zip64_sizes(
+                cd[pos + n : pos + n + m], [usize, csize, offset], name, path
+            )
+        pos += n + m + k
+        i += 1
+        yield name, (raw, flags, method, crc, csize, usize, offset + shift)
+
+
+def _read_exact(fh, n: int) -> bytes:
+    data = fh.read(n)
+    if len(data) != n:
+        raise EOFError(f"member data truncated by {n - len(data)} bytes")
+    return data
+
+
+def _streamed(new_decoder):
+    """A codec feeding ``new_decoder()`` bounded reads of the compressed
+    stream, so a task holds one decompressed member plus one read."""
+
+    def decode(fh, csize: int) -> bytearray:
+        dec = new_decoder()
+        out = bytearray()
+        left = csize
+        while left and not dec.eof:
+            chunk = _read_exact(fh, min(left, _READ_CHUNK))
+            left -= len(chunk)
+            out += dec.decompress(chunk)
+        if csize and not dec.eof:
+            raise EOFError("compressed stream does not reach its end")
+        return out
+
+    return decode
+
+
+def _zstd(fh, csize: int) -> bytes:
+    """zstd (method 93), which the reference's zip crate decodes by default
+    (its Cargo.toml:13), through pyarrow's codec."""
+    import pyarrow as pa
+
+    if not pa.Codec.is_available("zstd"):  # pragma: no cover - env guard
+        raise ZipFormatError("pyarrow lacks zstd support in this environment")
+    return pa.input_stream(pa.py_buffer(_read_exact(fh, csize)), compression="zstd").read()
+
+
+# Compression method → codec(fh at the member's data, compress_size).
+_CODECS = {
+    zipfile.ZIP_STORED: _read_exact,
+    zipfile.ZIP_DEFLATED: _streamed(lambda: zlib.decompressobj(-15)),
+    zipfile.ZIP_BZIP2: _streamed(bz2.BZ2Decompressor),
+    zipfile.ZIP_LZMA: _streamed(zipfile.LZMADecompressor),
+    93: _zstd,
+}
+
+
+def _read_member(fh, name: str, entry: tuple, path: str):
+    """One member's bytes: one seek to its local header, then its codec.
+    Keeps every check zipfile makes when extracting: refused flag bits, the
+    local-header signature, equal name bytes in the directory and the local
+    header, exactly ``compress_size`` bytes read, a compressed stream that
+    ends, and the length and CRC-32 the directory records."""
+    raw, flags, method, crc, csize, usize, offset = entry
+    if flags & _REFUSED_MASK:
+        why = ", ".join(v for b, v in _REFUSED_FLAGS.items() if flags & b)
+        raise ZipFormatError(f"member {name!r} in {path} is {why}")
+    decode = _CODECS.get(method)
+    if decode is None:
+        raise ZipFormatError(
+            f"unsupported zip compression (method {method}) for member {name!r} in {path}"
+        )
+    n = len(raw)
+    fh.seek(offset)
+    head = fh.read(_LOCAL_SIZE + n)
+    if len(head) != _LOCAL_SIZE + n or head[:4] != b"PK\x03\x04":
+        raise zipfile.BadZipFile(f"bad local file header for member {name!r} in {path}")
+    local_n, m = _LOCAL_NAME_LENS.unpack_from(head, 26)
+    if local_n != n or head[_LOCAL_SIZE:] != raw:
+        raise zipfile.BadZipFile(
+            f"local header name differs from the directory's for member {name!r} in {path}"
+        )
+    if m:
+        fh.seek(m, 1)
+    try:
+        data = decode(fh, csize)
+    except (zlib.error, lzma.LZMAError, EOFError, OSError, ValueError) as exc:
+        kind = ZipFormatError if isinstance(exc, ZipFormatError) else zipfile.BadZipFile
+        raise kind(f"cannot decode member {name!r} in {path}: {exc}") from exc
+    if len(data) != usize or zlib.crc32(data) != crc:
+        raise zipfile.BadZipFile(f"bad length or CRC-32 for member {name!r} in {path}")
+    return data
 
 
 @dataclass
@@ -296,6 +440,9 @@ class ZipMembersReader(DataSourceReader):
         pattern = re.compile(self.member_regex) if self.member_regex else None
         name_pred = self._compile(self.name_preds) if self.name_preds else None
         need_decompress = self.with_body or self.with_hash
+        src = partition.path if self.with_source else None
+        with_body, with_hash, strict_hash = self.with_body, self.with_hash, self.strict_hash
+        batch_rows, batch_bytes = self.batch_rows, self.batch_bytes
 
         names: list[str] = []
         sources: list[str | None] = []
@@ -319,49 +466,36 @@ class ZipMembersReader(DataSourceReader):
             return batch
 
         try:
-            with open(partition.path, "rb") as fh, zipfile.ZipFile(fh) as zf:
-                infos = zf.infolist()
-                if partition.start or partition.end is not None:
-                    infos = infos[partition.start : partition.end]
-                for info in infos:
-                    if pattern is not None and not pattern.match(info.filename):
+            with open(partition.path, "rb") as fh:
+                for name, entry in _central_directory(
+                    fh, partition.path, partition.start, partition.end
+                ):
+                    if pattern is not None and not pattern.match(name):
                         continue
-                    if name_pred is not None and not name_pred(info.filename):
+                    if name_pred is not None and not name_pred(name):
                         continue
-                    if need_decompress and not info.is_dir():
-                        if info.compress_type == _ZSTD_METHOD:
-                            data = _read_zstd_member(fh, info, partition.path)
-                        elif info.compress_type not in _SUPPORTED_METHODS:
-                            raise ZipFormatError(
-                                f"unsupported zip compression (method "
-                                f"{info.compress_type}) for member "
-                                f"{info.filename!r} in {partition.path}"
-                            )
-                        else:
-                            data = zf.read(info)
+                    if need_decompress and not name.endswith("/"):
+                        data = _read_member(fh, name, entry, partition.path)
                     else:
                         data = b""
-                    names.append(info.filename)
-                    sources.append(partition.path if self.with_source else None)
-                    if self.with_hash:
+                    names.append(name)
+                    sources.append(src)
+                    if with_hash:
                         h = hashlib.sha256(data)
-                        hashes.append(
-                            _strict_hash_hex(h.digest())
-                            if self.strict_hash
-                            else h.hexdigest()
-                        )
+                        hashes.append(_strict_hash_hex(h.digest()) if strict_hash else h.hexdigest())
                     else:
                         hashes.append(None)
-                    if self.with_body:
+                    if with_body:
                         bodies.append(data)
                         pending_bytes += len(data)
                     else:
                         bodies.append(None)
-                    if len(names) >= self.batch_rows or pending_bytes >= self.batch_bytes:
+                    if len(names) >= batch_rows or pending_bytes >= batch_bytes:
                         yield flush()
         except (zipfile.BadZipFile, ZipFormatError, OSError) as exc:
-            # ZipFormatError (unsupported compression method, missing zstd
-            # codec) must take the same skip path as structural corruption:
+            # ZipFormatError (unsupported compression method, encrypted or
+            # patched member, missing zstd codec) must take the same skip
+            # path as structural corruption:
             # permissive mode means "convert what this engine can read",
             # and the reference logs-and-fails per archive the same way
             # for undecodable members (builder.rs:65-71).
@@ -681,13 +815,14 @@ def read_zip_central_directory(
         for b in batches:
             for path in b["source"]:
                 names, sources, crcs, sizes, csizes = [], [], [], [], []
-                with zipfile.ZipFile(path) as zf:
-                    for info in zf.infolist():
-                        names.append(info.filename)
+                with open(path, "rb") as fh:
+                    for name, entry in _central_directory(fh, path):
+                        _raw, _flags, _method, crc, csize, size, _offset = entry
+                        names.append(name)
                         sources.append(path)
-                        crcs.append(info.CRC)
-                        sizes.append(info.file_size)
-                        csizes.append(info.compress_size)
+                        crcs.append(crc)
+                        sizes.append(size)
+                        csizes.append(csize)
                 yield _pd.DataFrame(
                     {
                         "name": names,
@@ -710,9 +845,9 @@ def extract_member_hashes(to_extract: DataFrame) -> DataFrame:
     WHICH members changed without touching member bytes).
 
     One applyInPandas group per archive: each task opens its archive once
-    and random-accesses just the named members (zipfile seeks straight to
-    each member's local header via the central directory — untouched
-    members are never read). Output (name, source, hash) uses the same
+    and random-accesses just the named members (one seek straight to each
+    member's local header via the central directory — untouched members
+    are never read). Output (name, source, hash) uses the same
     standard sha256 hex as ``read_zip_members``. Cost is O(churn bytes),
     independent of corpus size; the groupBy key is the archive path, so
     skew equals per-archive churn (bounded by archive size).
@@ -722,9 +857,13 @@ def extract_member_hashes(to_extract: DataFrame) -> DataFrame:
     def ex(key, pdf):
         path = key[0]
         hashes = []
-        with zipfile.ZipFile(path) as zf:
+        with open(path, "rb") as fh:
+            # A duplicated name resolves to its last entry, as zipfile's
+            # name lookup does.
+            entries = dict(_central_directory(fh, path))
             for nm in pdf["name"]:
-                hashes.append(hashlib.sha256(zf.read(nm)).hexdigest())
+                data = _read_member(fh, nm, entries[nm], path)
+                hashes.append(hashlib.sha256(data).hexdigest())
         return _pd.DataFrame(
             {"name": pdf["name"], "source": path, "hash": hashes}
         )
